@@ -163,8 +163,6 @@ def main(argv=None) -> int:
 
     from .io_tables import read_table, write_table
 
-    engine = ValidationEngine(spark)
-
     if args.docs:
         # single-file mode: parse driver-side (JSON or YAML), one row per
         # file, validated through the identical compiled variant plan
@@ -206,7 +204,7 @@ def main(argv=None) -> int:
                                             store, "doc_path",
                                             fail_fast=args.fail_fast)
             else:
-                annotated = engine.validate_json(
+                annotated = ValidationEngine(spark).validate_json(
                     df, "doc", group_schema, id_cols=["doc_path"],
                     store=store, fail_fast=args.fail_fast).annotated
             verdicts = {r["doc_path"]: r for r in
@@ -255,15 +253,13 @@ def main(argv=None) -> int:
                                     args.id_col, fail_fast=args.fail_fast)
         result = ValidationResult(annotated, [args.id_col])
     elif args.json_col:
-        result = engine.validate_json(df, args.json_col, schema,
-                                      id_cols=[args.id_col], store=store,
-                                      verdict_only=args.verdict_only,
-                                      fail_fast=args.fail_fast)
+        result = ValidationEngine(spark).validate_json(
+            df, args.json_col, schema, id_cols=[args.id_col], store=store,
+            verdict_only=args.verdict_only, fail_fast=args.fail_fast)
     else:
-        result = engine.validate_typed(df, schema, id_cols=[args.id_col],
-                                       store=store,
-                                       verdict_only=args.verdict_only,
-                                       fail_fast=args.fail_fast)
+        result = ValidationEngine(spark).validate_typed(
+            df, schema, id_cols=[args.id_col], store=store,
+            verdict_only=args.verdict_only, fail_fast=args.fail_fast)
 
     if args.violations and not args.verdict_only:
         write_table(result.violations, args.violations, fmt=args.format,

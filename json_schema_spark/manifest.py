@@ -10,9 +10,18 @@ Design (batch, not Structured Streaming — SURVEY.md §4):
   ``pmod(xxhash64(doc_id), n_buckets)`` — never by
   ``spark_partition_id()``, which changes with splits/parallelism. The
   same (corpus, n_buckets) always yields the same bucket→doc mapping.
-- Each run processes buckets in groups; after a group's violations land in
-  the sink, its manifest rows are appended atomically (one parquet file per
-  commit, write-then-rename-free: parquet append of a tiny DataFrame).
+- The corpus is staged once as a bucket-partitioned parquet layout,
+  rebalanced by bucket first so AQE writes about one file per bucket (split
+  at the advisory partition size) instead of one per (input split ×
+  bucket). The price is one shuffle of the corpus during staging — the
+  hash-distribution write an Iceberg bucket-partitioned table also does.
+- Each run processes buckets in groups, and each group is ONE data pass:
+  the per-bucket manifest stats are observed metrics
+  (``DataFrame.observe``) of the violations write, taken above the
+  validation kernel and below the violations filter so they see every row.
+  After the write lands, the group's manifest rows are appended from the
+  observed values as a driver-built literal frame (one parquet file per
+  commit); every bucket of the group gets a row, an empty one too.
 - Resume = read manifest, collect completed bucket ids (a few thousand
   ints), and filter them out of the scan. On a bucket-partitioned Iceberg/
   parquet layout that filter is partition pruning; on an unpartitioned one
@@ -24,12 +33,11 @@ Design (batch, not Structured Streaming — SURVEY.md §4):
 
 from __future__ import annotations
 
-import os
 import uuid
 from dataclasses import dataclass
 from typing import List, Optional, Union
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
 from .engine import ERRORS_COL, VALID_COL, ValidationEngine
 from .schema import SchemaNode
@@ -39,6 +47,13 @@ BUCKET_COL = "__jss_bucket"
 MANIFEST_SCHEMA = ("run_id string, bucket int, rows long, valid_docs long, "
                    "violations long, digest string, status string, "
                    "committed_at timestamp")
+
+
+def _hadoop_path(spark: SparkSession, path: str):
+    """(FileSystem, Path) for ``path`` — any scheme Hadoop knows (local,
+    file:, hdfs:, s3a:), not only local paths."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
 
 def with_bucket(df: DataFrame, key: str, n_buckets: int) -> DataFrame:
@@ -53,12 +68,56 @@ def ensure_bucketed_staging(spark: SparkSession, df: DataFrame, key: str,
     resume cheap: per-group bucket filters become partition pruning (each
     commit group scans only its own directories) instead of n_buckets /
     buckets_per_commit full scans of the corpus. On Iceberg the input table
-    itself would be bucket-partitioned and this step disappears."""
-    success = os.path.join(staging_path, "_SUCCESS")
-    if not os.path.exists(success):
-        (with_bucket(df, key, n_buckets)
+    itself would be bucket-partitioned and this step disappears.
+
+    The write is rebalanced by bucket (one shuffle of the corpus), so AQE
+    writes about one file per bucket directory, split at the advisory
+    partition size, instead of one per (input split × bucket)."""
+    fs, success = _hadoop_path(spark, staging_path.rstrip("/") + "/_SUCCESS")
+    if not fs.exists(success):
+        (with_bucket(df, key, n_buckets).hint("rebalance", BUCKET_COL)
          .write.mode("overwrite").partitionBy(BUCKET_COL).parquet(staging_path))
     return spark.read.parquet(staging_path)
+
+
+def _bucket_stats(bucket: int, key: str) -> List[Column]:
+    """Observed metrics of one bucket: rows, valid docs, violations and the
+    sketch digest (key range + distinct-count sketch, so corpus stats merge
+    from the manifest alone without re-reading data), each an aggregate over
+    the bucket's rows only. An empty bucket's digest has no key fields."""
+    def of(col: Column) -> Column:
+        return F.when(F.col(BUCKET_COL) == bucket, col)
+
+    rows = F.count(of(F.lit(1)))
+    n_errors = F.size(ERRORS_COL)
+    return [
+        rows.alias(f"rows_{bucket}"),
+        F.coalesce(F.sum(of(F.col(VALID_COL).cast("long"))), F.lit(0))
+        .alias(f"valid_docs_{bucket}"),
+        F.coalesce(F.sum(of(n_errors.cast("long"))), F.lit(0))
+        .alias(f"violations_{bucket}"),
+        F.to_json(F.struct(
+            F.min(of(F.col(key))).alias("key_min"),
+            F.max(of(F.col(key))).alias("key_max"),
+            F.when(rows > 0, F.approx_count_distinct(of(F.col(key))))
+            .alias("key_distinct"),
+            F.max(of(n_errors)).alias("max_doc_violations"),
+        )).alias(f"digest_{bucket}"),
+    ]
+
+
+def _manifest_rows(spark: SparkSession, run_id: str, group: List[int],
+                   observed: dict) -> DataFrame:
+    """The group's manifest rows as a literal frame (no Python workers):
+    one row per bucket, cast to ``MANIFEST_SCHEMA``."""
+    rows = [F.struct(F.lit(run_id), F.lit(b), F.lit(observed[f"rows_{b}"]),
+                     F.lit(observed[f"valid_docs_{b}"]),
+                     F.lit(observed[f"violations_{b}"]),
+                     F.lit(observed[f"digest_{b}"]), F.lit("done"),
+                     F.current_timestamp())
+            for b in group]
+    return spark.range(1).select(F.inline(
+        F.array(*rows).cast(f"array<struct<{MANIFEST_SCHEMA}>>")))
 
 
 class RunManifest:
@@ -144,8 +203,12 @@ def validate_resumable(
             raise RuntimeError(f"injected failure after {len(processed)} buckets")
         chunk = bucketed.where(F.col(BUCKET_COL).isin(group))
         result = engine.validate_typed(chunk.drop(BUCKET_COL), schema, id_cols=id_cols)
-        annotated = result.annotated.withColumn(
-            BUCKET_COL, F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int"))
+        # the stats ride on the violations write: observed above the kernel
+        # and below the violations filter, so they see every row
+        stats = Observation()
+        annotated = (with_bucket(result.annotated, key, n_buckets)
+                     .observe(stats, *[m for b in group
+                                       for m in _bucket_stats(b, key)]))
 
         (annotated.where(F.size(ERRORS_COL) > 0)
          .select(*id_cols, F.col(BUCKET_COL).alias("bucket"),
@@ -153,25 +216,7 @@ def validate_resumable(
          .select(*id_cols, "bucket", "e.path", "e.error_type", "e.message")
          .write.mode("append").parquet(violations_path))
 
-        stats = (annotated.groupBy(F.col(BUCKET_COL).alias("bucket"))
-                 .agg(F.count(F.lit(1)).alias("rows"),
-                      F.sum(F.col(VALID_COL).cast("long")).alias("valid_docs"),
-                      F.sum(F.size(ERRORS_COL).cast("long")).alias("violations"),
-                      # per-bucket sketch digest: key range + distinct-count
-                      # sketch, so corpus stats merge from the manifest alone
-                      # without re-reading data (north-rule lineage+metrics)
-                      F.to_json(F.struct(
-                          F.min(F.col(key)).alias("key_min"),
-                          F.max(F.col(key)).alias("key_max"),
-                          F.approx_count_distinct(key).alias("key_distinct"),
-                          F.max(F.size(ERRORS_COL)).alias("max_doc_violations"),
-                      )).alias("digest"))
-                 .withColumn("run_id", F.lit(run_id))
-                 .withColumn("status", F.lit("done"))
-                 .withColumn("committed_at", F.current_timestamp())
-                 .select("run_id", "bucket", "rows", "valid_docs",
-                         "violations", "digest", "status", "committed_at"))
-        manifest.append(stats)
+        manifest.append(_manifest_rows(spark, run_id, group, stats.get))
         processed.extend(group)
 
     return ResumableRun(
@@ -205,9 +250,7 @@ def compact_violations(spark: SparkSession, violations_path: str,
     (``compacted=False``)."""
     import math
 
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(violations_path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = _hadoop_path(spark, violations_path)
     parts = [st for st in fs.listStatus(hpath)
              if st.getPath().getName().startswith("part-")]
     total_bytes = sum(st.getLen() for st in parts)
@@ -219,7 +262,7 @@ def compact_violations(spark: SparkSession, violations_path: str,
     df = spark.read.parquet(violations_path)
     rows_before = df.count()
     tmp = violations_path.rstrip("/") + "__compact_tmp"
-    tmp_path = jvm.org.apache.hadoop.fs.Path(tmp)
+    tmp_path = spark._jvm.org.apache.hadoop.fs.Path(tmp)
     df.repartition(n_out).write.mode("overwrite").parquet(tmp)
     rows_after = spark.read.parquet(tmp).count()
     if rows_after != rows_before:  # never swap in a lossy rewrite

@@ -68,11 +68,17 @@ def test_resume_after_crash(spark, docs, tmp_path):
 def test_staging_enables_partition_pruning(spark, docs, tmp_path):
     """The judge-visible scan contract: a commit group over the staged
     layout reads ONLY its own bucket directories (partition pruning), not
-    the whole corpus per group."""
+    the whole corpus per group. The staging write is rebalanced by bucket,
+    so at test scale every bucket directory holds exactly one file, however
+    many input splits there are."""
+    import glob
+
     from json_schema_spark.manifest import BUCKET_COL, ensure_bucketed_staging
 
-    staged = ensure_bucketed_staging(spark, docs, "doc_id", 8,
-                                     str(tmp_path / "staging"))
+    path = tmp_path / "staging"
+    staged = ensure_bucketed_staging(spark, docs, "doc_id", 8, str(path))
+    dirs = sorted(glob.glob(f"{path}/{BUCKET_COL}=*"))
+    assert [len(glob.glob(f"{d}/*.parquet")) for d in dirs] == [1] * 8
     group = staged.where(F.col(BUCKET_COL).isin([0, 3]))
     files = [r[0] for r in group.select(F.input_file_name()).distinct().collect()]
     assert files, "group scan read no files"
@@ -82,15 +88,18 @@ def test_staging_enables_partition_pruning(spark, docs, tmp_path):
 
 
 def test_staging_reused_on_resume(spark, docs, tmp_path):
-    from json_schema_spark.manifest import ensure_bucketed_staging
-
-    path = str(tmp_path / "staging2")
-    ensure_bucketed_staging(spark, docs, "doc_id", 4, path)
+    """An existing staging is reused, given as a local path or as a URI
+    (the _SUCCESS check goes through the Hadoop FileSystem)."""
     import os
 
-    mtime = os.path.getmtime(os.path.join(path, "_SUCCESS"))
-    ensure_bucketed_staging(spark, docs, "doc_id", 4, path)
-    assert os.path.getmtime(os.path.join(path, "_SUCCESS")) == mtime
+    from json_schema_spark.manifest import ensure_bucketed_staging
+
+    for local, path in ((tmp_path / "staging2",) * 2,
+                        (tmp_path / "staging3", f"file://{tmp_path}/staging3")):
+        ensure_bucketed_staging(spark, docs, "doc_id", 4, str(path))
+        mtime = os.path.getmtime(local / "_SUCCESS")
+        ensure_bucketed_staging(spark, docs, "doc_id", 4, str(path))
+        assert os.path.getmtime(local / "_SUCCESS") == mtime, path
 
 
 def test_clean_run_then_noop_rerun(spark, docs, tmp_path):
@@ -142,3 +151,95 @@ def test_compact_violations(spark, docs, tmp_path):
                                target_file_bytes=1024 * 1024 * 1024)
     assert again["compacted"] is False
     assert glob.glob(f"{violations_path}/part-*") == after_files
+
+
+def test_empty_buckets_committed(spark, tmp_path):
+    """A bucket with no docs is still committed (rows = 0, a digest without
+    key fields), so a finished run over a small corpus resumes to nothing."""
+    import json as _json
+
+    cfg = DocGenConfig(n_docs=5, seed=5, bad_kind_rate=0.05, partitions=1)
+    small = generate_documents(spark, cfg)
+    schema = documents_json_schema(cfg)
+    manifest_path = str(tmp_path / "m")
+    run1 = validate_resumable(spark, small, schema, manifest_path,
+                              str(tmp_path / "v"), n_buckets=16)
+    assert sorted(run1.processed_buckets) == list(range(16))
+    run2 = validate_resumable(spark, small, schema, manifest_path,
+                              str(tmp_path / "v"), n_buckets=16)
+    assert run2.processed_buckets == []
+    assert sorted(run2.skipped_buckets) == list(range(16))
+
+    rows = spark.read.parquet(manifest_path).collect()
+    assert sorted(r["bucket"] for r in rows) == list(range(16))
+    assert sum(r["rows"] for r in rows) == cfg.n_docs
+    empty = [r for r in rows if r["rows"] == 0]
+    assert len(empty) >= 11  # 5 docs fill at most 5 of 16 buckets
+    for r in empty:
+        assert (r["valid_docs"], r["violations"]) == (0, 0)
+        assert _json.loads(r["digest"]) == {}
+
+
+def test_manifest_stats_match_groupby(spark, docs, tmp_path):
+    """The observed per-bucket stats equal an independent groupBy over the
+    engine's annotated output on the same docs."""
+    import json as _json
+
+    from json_schema_spark.engine import ERRORS_COL, VALID_COL
+
+    schema = documents_json_schema(CFG)
+    manifest_path = str(tmp_path / "m")
+    validate_resumable(spark, docs, schema, manifest_path, str(tmp_path / "v"),
+                       n_buckets=8, buckets_per_commit=3)
+    actual = {r["bucket"]: (r["rows"], r["valid_docs"], r["violations"],
+                            _json.loads(r["digest"]))
+              for r in spark.read.parquet(manifest_path).collect()}
+
+    annotated = ValidationEngine(spark).validate_typed(
+        docs, schema, id_cols=["doc_id"]).annotated
+    n_errors = F.size(ERRORS_COL)
+    expected = {
+        r["bucket"]: (r["rows"], r["valid_docs"], r["violations"], {
+            "key_min": r["key_min"], "key_max": r["key_max"],
+            "key_distinct": r["key_distinct"],
+            "max_doc_violations": r["max_doc_violations"]})
+        for r in annotated.groupBy(
+            F.pmod(F.xxhash64("doc_id"), F.lit(8)).cast("int").alias("bucket"))
+        .agg(F.count(F.lit(1)).alias("rows"),
+             F.sum(F.col(VALID_COL).cast("long")).alias("valid_docs"),
+             F.sum(n_errors).alias("violations"),
+             F.min("doc_id").alias("key_min"), F.max("doc_id").alias("key_max"),
+             F.approx_count_distinct("doc_id").alias("key_distinct"),
+             F.max(n_errors).alias("max_doc_violations")).collect()}
+    assert len(actual) == 8
+    assert actual == expected
+
+
+def test_commit_group_is_one_pass(spark, docs, tmp_path):
+    """One commit group launches exactly one job that reads the staged
+    data, and that job reads each staged row once: the manifest stats are
+    observed on the violations write, not computed by a second pass."""
+    from json_schema_spark.manifest import ensure_bucketed_staging
+
+    schema = documents_json_schema(CFG)
+    staging = str(tmp_path / "staging")
+    ensure_bucketed_staging(spark, docs, "doc_id", 4, staging)
+    sc = spark.sparkContext
+    group = f"one-pass-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        validate_resumable(spark, docs, schema, str(tmp_path / "m"),
+                           str(tmp_path / "v"), n_buckets=4,
+                           buckets_per_commit=4, staging_path=staging)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(30_000)
+    store = jsc.statusStore()
+    tracker = sc.statusTracker()
+    reads = {}  # job -> rows read from files (a range source reads no bytes)
+    for job in tracker.getJobIdsForGroup(group):
+        stages = [store.lastStageAttempt(s) for s in tracker.getJobInfo(job).stageIds]
+        if sum(st.inputBytes() for st in stages):
+            reads[job] = sum(st.inputRecords() for st in stages)
+    assert list(reads.values()) == [CFG.n_docs], reads
