@@ -11,9 +11,13 @@ lib/json_schema.rb:10-31):
 Spark-side API:
 
     from json_schema_spark.engine import ValidationEngine
-    result = ValidationEngine(spark).validate(df, schema_dict)
-    result.violations   # DataFrame(doc_id, path, error_type, schema_pointer, message)
-    result.verdicts     # DataFrame(partition_id, docs, valid_docs, invalid_docs, violations)
+    result = ValidationEngine(spark).validate_json(df, "doc", schema_dict,
+                                                   id_cols=["doc_id"])
+    result.violations   # DataFrame(doc_id, path, error_type, schema_pointer,
+                        #           message, sub_errors, data_json)
+    result.verdicts     # DataFrame(partition_id, docs, valid_docs, invalid_docs,
+                        #           violation_count)
+    # also validate_variant (a VARIANT column) and validate_typed (typed columns)
 """
 
 from __future__ import annotations

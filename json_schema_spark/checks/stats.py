@@ -57,18 +57,6 @@ def column_stats(df: DataFrame, cols: Optional[List[str]] = None,
     )
 
 
-def column_stats_sql(table: str, col: str) -> str:
-    """The equivalent ANSI-SQL for one numeric column (DuckDB oracle)."""
-    return f"""
-        SELECT count(*) AS count,
-               sum(CASE WHEN {col} IS NULL THEN 1 ELSE 0 END) AS nulls,
-               avg({col}) AS mean,
-               min({col}) AS min_v,
-               max({col}) AS max_v
-        FROM {table}
-    """
-
-
 def per_partition_stats(df: DataFrame, col: str) -> DataFrame:
     """Moments per input partition (feeds the run manifest's sketch digests).
     Map-side only: one output row per partition."""

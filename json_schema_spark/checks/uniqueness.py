@@ -28,11 +28,6 @@ def duplicate_keys(df: DataFrame, key: str) -> DataFrame:
     )
 
 
-def duplicate_keys_sql(table: str, key: str) -> str:
-    return (f"SELECT {key}, count(*) AS dup_count FROM {table} "
-            f"GROUP BY {key} HAVING count(*) > 1")
-
-
 def duplicate_key_rows(df: DataFrame, key: str, broadcast_threshold: int = 10_000_000) -> DataFrame:
     """All rows participating in a duplicated key (violation rows)."""
     dups = duplicate_keys(df, key).select(key)

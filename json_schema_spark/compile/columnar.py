@@ -172,14 +172,27 @@ class ColumnarCompiler:
         )
         self._var_counter = 0
         # (column_name, sql) pairs the engine must project BEFORE evaluating
-        # the compiled parts: UDF-backed format checks under a higher-order
-        # lambda are hoisted here as whole-collection array columns (Python
-        # UDFs cannot run inside a lambda)
+        # the compiled parts, in dependency order (a column's SQL may name
+        # earlier ones): shared variant accessors (hoist) and UDF-backed
+        # format checks under a higher-order lambda, hoisted as
+        # whole-collection array columns (Python UDFs cannot run inside a
+        # lambda)
         self.preprojections: List[tuple] = []
+        self._hoisted: dict = {}
 
     def _fresh(self, prefix: str) -> str:
         self._var_counter += 1
         return f"{prefix}_{self._var_counter}"
+
+    def hoist(self, sql: str) -> str:
+        """The name of a pre-projected column holding ``sql``; the same text
+        always gets the same column. ``sql`` must be lambda-free and
+        null-safe: the column is evaluated for every row."""
+        name = self._hoisted.get(sql)
+        if name is None:
+            name = self._hoisted[sql] = f"__jss_c{len(self._hoisted)}"
+            self.preprojections.append((name, sql))
+        return name
 
     def compile(self, schema: SchemaNode, value: Value, path: str = "'#'") -> Compiled:
         return self._node(schema, value, path, ())
@@ -627,6 +640,8 @@ class ColumnarCompiler:
 
     def _pattern_properties_parts(self, schema: SchemaNode, value: Value,
                                   path: str, stack) -> List[Compiled]:
+        if not schema.pattern_properties:
+            return []
         ents = value.static_object_entries()
         if ents is not None:
             import re

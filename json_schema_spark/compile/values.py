@@ -136,46 +136,29 @@ def _ruby_num_string(decimal_expr: str, is_integer: BoolLike) -> str:
 
 
 class VariantValue(Value):
-    def __init__(self, expr: str, in_lambda: bool = False,
-                 object_map_col: str = None, lam_ctx=None,
-                 child_map_cols=None, tag_col: str = None,
-                 child_tag_cols=None, arr_col: str = None,
-                 child_arr_cols=None, child_value_cols=None):
+    def __init__(self, expr: str, in_lambda: bool = False, lam_ctx=None,
+                 hoist=None):
         # SQL scalar functions cannot be invoked on lambda variables (the
         # inlined Project loses resolution), so values rooted at a
         # higher-order-function variable inline their render bodies instead.
         self.expr = expr
         self.in_lambda = in_lambda
         self.lam_ctx = lam_ctx
-        # manual CSE: the engine pre-projects the root object's
-        # map<string,variant> cast into a column (it appears once per
-        # property access and codegen-time subexpression elimination is
-        # disabled — see engine.py). child_map_cols extends the same CSE one
-        # level down: property key -> pre-projected map column for that
-        # property's own object cast (engine.validate_variant).
-        self.object_map_col = object_map_col
-        self.child_map_cols = child_map_cols or {}
-        # same CSE for the TYPE TAG: schema_of_variant walks the whole
-        # subtree per call, every keyword's type dispatch calls it (a
-        # "number" test alone references the tag 4x), and with codegen
-        # subexpression elimination disabled each textual occurrence is a
-        # fresh per-row walk — the r6 profile of the 20-keyword scaffold
-        # plan counted 358 occurrences. tag_col / child_tag_cols are
-        # engine-pre-projected columns holding schema_of_variant of the
-        # root / of element_at(root map, key), evaluated once per row.
-        self.tag_col = tag_col
-        self.child_tag_cols = child_tag_cols or {}
-        # and for the array<variant> cast (items/min/maxItems/uniqueItems
-        # each re-derived it) and the raw child variant itself (shrinks
-        # every use site, incl. analysis-inlined render bodies)
-        self.arr_col = arr_col
-        self.child_arr_cols = child_arr_cols or {}
-        self.child_value_cols = child_value_cols or {}
+        # Common-subexpression table (ColumnarCompiler.hoist; None for
+        # lambda-rooted values): codegen subexpression elimination is off
+        # (see engine.py), so every textual repeat of an accessor is a fresh
+        # per-row evaluation. The type tag is the costly one:
+        # schema_of_variant walks the whole subtree and each keyword's type
+        # dispatch reads it (a "number" test 4x). The tag, the object-map
+        # and array casts and each child variant are therefore pre-projected
+        # once per distinct SQL text, at any depth.
+        self.hoist = hoist
+
+    def _shared(self, sql: str) -> str:
+        return self.hoist(sql) if self.hoist else sql
 
     def _tag(self) -> str:
-        if self.tag_col:
-            return self.tag_col
-        return fn("schema_of_variant", self.expr)
+        return self._shared(fn("schema_of_variant", self.expr))
 
     def is_type(self, json_type: str) -> str:
         t = self._tag()
@@ -216,17 +199,13 @@ class VariantValue(Value):
         return fn("try_variant_get", self.expr, "'$'", "'decimal(38,12)'")
 
     def array_elements(self) -> str:
-        if self.arr_col:
-            return self.arr_col
-        return fn("try_variant_get", self.expr, "'$'", "'array<variant>'")
+        return self._shared(fn("try_variant_get", self.expr, "'$'", "'array<variant>'"))
 
     def wrap_element(self, elem_expr: str) -> "VariantValue":
         return VariantValue(elem_expr, in_lambda=True)
 
     def object_map(self) -> str:
-        if self.object_map_col:
-            return self.object_map_col
-        return fn("try_variant_get", self.expr, "'$'", "'map<string,variant>'")
+        return self._shared(fn("try_variant_get", self.expr, "'$'", "'map<string,variant>'"))
 
     def object_keys(self) -> str:
         return fn("map_keys", self.object_map())
@@ -235,20 +214,15 @@ class VariantValue(Value):
         return f"coalesce(map_contains_key({self.object_map()}, {sql_str(key)}), false)"
 
     def get_property(self, key: str) -> "VariantValue":
-        expr = (self.child_value_cols.get(key)
-                or fn("element_at", self.object_map(), sql_str(key)))
-        return VariantValue(expr,
-                            in_lambda=self.in_lambda, lam_ctx=self.lam_ctx,
-                            object_map_col=self.child_map_cols.get(key),
-                            tag_col=self.child_tag_cols.get(key),
-                            arr_col=self.child_arr_cols.get(key))
+        return VariantValue(
+            self._shared(fn("element_at", self.object_map(), sql_str(key))),
+            in_lambda=self.in_lambda, lam_ctx=self.lam_ctx, hoist=self.hoist)
 
     def truthy_property(self, key: str) -> str:
-        v = (self.child_value_cols.get(key)
-             or fn("element_at", self.object_map(), sql_str(key)))
-        t = self.child_tag_cols.get(key) or fn("schema_of_variant", v)
+        child = self.get_property(key)
+        t = child._tag()
         return (f"coalesce({self.has_property(key)} AND ({t} <> 'VOID') AND "
-                f"(({t} <> 'BOOLEAN') OR try_variant_get({v}, '$', 'boolean')), false)")
+                f"(({t} <> 'BOOLEAN') OR try_variant_get({child.expr}, '$', 'boolean')), false)")
 
     def wrap_map_value(self, value_expr: str) -> "VariantValue":
         return VariantValue(value_expr, in_lambda=True)

@@ -20,6 +20,7 @@ from __future__ import annotations
 import hashlib as _hashlib
 import json as _json
 import os
+import re
 from collections import OrderedDict
 from typing import List, Optional, Union
 
@@ -39,6 +40,7 @@ from .schema import SchemaNode
 
 VALID_COL = "is_valid"
 ERRORS_COL = "violations"
+_PRE_REF = re.compile(r"__jss_\w+")
 
 
 def compile_schema(schema: Union[dict, SchemaNode],
@@ -52,20 +54,6 @@ def compile_schema(schema: Union[dict, SchemaNode],
     if not expander.expand(node, store=store):
         raise AggregateError(expander.errors)
     return node
-
-
-def _object_accesses(node: SchemaNode) -> int:
-    """How many times the compiled SQL for this subschema reads its own
-    object map (each property access reads it ~2x: has_property + get)."""
-    n = 2 * len(node.properties or {})
-    n += 2 * len(node.required or [])
-    n += len(node.dependencies or {})
-    if node.pattern_properties or node.additional_properties is not None:
-        n += 2
-    if node.strict_properties or node.max_properties is not None \
-            or node.min_properties is not None:
-        n += 1
-    return n
 
 
 class ValidationResult:
@@ -155,9 +143,10 @@ class ValidationEngine:
         # Codegen-time subexpression elimination does a quadratic equivalence
         # search; on compiled-schema expression trees (10k+ nodes) it hangs
         # for minutes. Interpreted/codegen execution without it is fast
-        # (measured: >400s -> ~2s on the test scaffold). The engine instead
-        # de-duplicates the expensive shared subexpressions itself (variant
-        # object casts are pre-projected where it matters).
+        # (measured: >400s -> ~2s on the test scaffold). The compiler instead
+        # de-duplicates the shared variant accessors itself: each distinct
+        # tag, cast and child-variant text is pre-projected once
+        # (ColumnarCompiler.hoist).
         spark.conf.set("spark.sql.subexpressionElimination.enabled", "false")
         # Constraint propagation walks every alias in a Project to infer
         # filters/nullability — quadratic over compiled-schema expression
@@ -186,7 +175,7 @@ class ValidationEngine:
     # contents can change without the key changing.
     _COMPILE_CACHE: "OrderedDict[tuple, tuple]" = OrderedDict()
     _COMPILE_CACHE_MAX = 64
-    _DISK_CACHE_FMT = 3  # bump on any change to the serialized shape
+    _DISK_CACHE_FMT = 4  # bump on any change to the serialized shape
 
     def _cached_compile(self, mode_key: tuple, schema, store, build):
         # an EMPTY document store is inert (external $refs fail identically
@@ -289,12 +278,23 @@ class ValidationEngine:
                   verdict_only: bool = False,
                   fail_fast: bool = False,
                   preprojections: Optional[List[tuple]] = None) -> ValidationResult:
-        # UDF-backed format checks hoisted out of higher-order lambdas
-        # (ColumnarCompiler.preprojections) become real columns first
-        pre_names = []
-        for name, sql in (preprojections or []):
-            df = df.withColumn(name, F.expr(sql))
-            pre_names.append(name)
+        # ColumnarCompiler.preprojections become real columns first, one
+        # withColumns per dependency level (a column's level is one past the
+        # deepest earlier pre-projection its SQL names): every stacked
+        # Project adds Catalyst optimization and planning time. Columns no
+        # part reads are pruned by Catalyst.
+        levels = {}
+        groups: List[dict] = []
+        for name, sql in preprojections or []:
+            level = 1 + max((levels[ref] for ref in _PRE_REF.findall(sql)
+                             if ref in levels), default=-1)
+            levels[name] = level
+            if level == len(groups):
+                groups.append({})
+            groups[level][name] = F.expr(sql)
+        for group in groups:
+            df = df.withColumns(group)
+        pre_names = list(levels)
         # one column per root keyword part: many shallow expressions analyze
         # far faster than one deep combined tree (see compile_parts)
         n = len(parts)
@@ -342,75 +342,18 @@ class ValidationEngine:
                          store: Optional[DocumentStore] = None,
                          verdict_only: bool = False,
                          fail_fast: bool = False) -> ValidationResult:
-        from .compile.sqlgen import sql_str
-
-        obj_col = "__jss_omap"
-
-        tag_col = "__jss_vtag"
-
         def build():
             node = compile_schema(schema, store)
-            # Manual-CSE pre-projections, one level down from the root (r6
-            # widened; codegen subexpression elimination is disabled — see
-            # __init__ — so every textual repeat is a per-row re-eval and a
-            # serialized-plan-size multiplier). Per property subschema:
-            # - pv: the raw child variant (element_at of the root map) —
-            #   shrinks EVERY use site, including the analysis-inlined
-            #   jss_to_s/jss_inspect render bodies;
-            # - tag: schema_of_variant(pv) — every keyword's type dispatch
-            #   reads it (up to 4x per test), and it walks the subtree;
-            # - arr: the array<variant> cast of pv — items/min/maxItems/
-            #   uniqueItems re-derived it per use;
-            # - map: the map<string,variant> cast for nested-object
-            #   subschemas with 2+ object accesses.
-            # Unreferenced columns are pruned by Catalyst, so speculative
-            # pre-projection is free; all casts are try_/null-safe, so
-            # evaluating them unconditionally cannot introduce errors.
-            prop_specs = []
-            for i, (key, sub) in enumerate((node.properties or {}).items()):
-                map_col = None
-                if isinstance(sub, SchemaNode) and _object_accesses(sub) >= 2:
-                    map_col = f"__jss_omap_{i}"
-                prop_specs.append((key, f"__jss_pv_{i}", f"__jss_vtag_{i}",
-                                   f"__jss_varr_{i}", map_col))
-            value = VariantValue(
-                variant_col, object_map_col=obj_col, tag_col=tag_col,
-                child_value_cols={k: pv for k, pv, _, _, _ in prop_specs},
-                child_tag_cols={k: tg for k, _, tg, _, _ in prop_specs},
-                child_arr_cols={k: ar for k, _, _, ar, _ in prop_specs},
-                child_map_cols={k: mp for k, _, _, _, mp in prop_specs
-                                if mp is not None})
             compiler = self._compiler()
+            value = VariantValue(variant_col, hoist=compiler.hoist)
             parts = compiler.compile_parts(node, value)
-            return parts, compiler.preprojections, prop_specs
+            return parts, compiler.preprojections
 
-        parts, preprojections, prop_specs = self._cached_compile(
+        parts, preprojections = self._cached_compile(
             ("variant", variant_col), schema, store, build)
-        # pre-project the root object-map cast + root tag once (manual CSE)
-        df = df.withColumns({
-            obj_col: F.expr(f"try_variant_get({variant_col}, '$', "
-                            f"'map<string,variant>')"),
-            tag_col: F.expr(f"schema_of_variant({variant_col})"),
-        })
-        drop_cols = [obj_col, tag_col]
-        if prop_specs:
-            pv_exprs, derived = {}, {}
-            for key, pv, tg, ar, mp in prop_specs:
-                pv_exprs[pv] = F.expr(
-                    f"element_at({obj_col}, {sql_str(key)})")
-                derived[tg] = F.expr(f"schema_of_variant({pv})")
-                derived[ar] = F.expr(
-                    f"try_variant_get({pv}, '$', 'array<variant>')")
-                if mp is not None:
-                    derived[mp] = F.expr(
-                        f"try_variant_get({pv}, '$', 'map<string,variant>')")
-                drop_cols.extend([pv, tg, ar] + ([mp] if mp else []))
-            df = df.withColumns(pv_exprs).withColumns(derived)
-        result = self._annotate(df, parts, id_cols, verdict_only=verdict_only,
-                                fail_fast=fail_fast,
-                                preprojections=preprojections)
-        result.annotated = result.annotated.drop(*drop_cols)
-        return result
+        return self._annotate(df, parts, id_cols, verdict_only=verdict_only,
+                              fail_fast=fail_fast,
+                              preprojections=preprojections)
 
     def validate_json(self, df: DataFrame, json_col: str,
                       schema: Union[dict, SchemaNode],

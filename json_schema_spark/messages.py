@@ -4,7 +4,8 @@ The reference embeds Ruby ``#to_s`` / ``#inspect`` renderings of data values
 inside its error messages (e.g. validator.rb:533 renders ``4`` vs ``"4"``;
 float ``10.0`` keeps its ``.0``). These helpers reproduce those renderings
 for Python values (driver-side: parser errors, tests, local oracle). The
-Spark-side Column equivalents live in ``compile/render.py``.
+Spark-side SQL equivalents are the ``render_*`` methods in
+``compile/values.py``.
 """
 
 from __future__ import annotations
@@ -78,136 +79,3 @@ def ruby_regexp_inspect(pattern_source: str) -> str:
     """Ruby Regexp#inspect for a pattern compiled with no flags: /source/."""
     return f"/{pattern_source}/"
 
-
-# --- validator message templates (validator.rb, exact format strings) ------
-
-
-def pluralize_is_are(n: int) -> str:
-    return " is" if n == 1 else "s are"
-
-
-def msg_all_of_failed() -> str:
-    return 'Not all subschemas of "allOf" matched.'
-
-
-def msg_any_of_failed() -> str:
-    return 'No subschema in "anyOf" matched.'
-
-
-def msg_one_of_failed(num_valid: int) -> str:
-    if num_valid == 0:
-        return 'No subschema in "oneOf" matched.'
-    return 'More than one subschema in "oneOf" matched.'
-
-
-def msg_not_failed() -> str:
-    return 'Matched "not" subschema.'
-
-
-def msg_invalid_format(data: Any, fmt: str) -> str:
-    return f"{ruby_to_s(data)} is not a valid {fmt}."
-
-
-def msg_invalid_enum(data: Any, enum: list) -> str:
-    return f"{ruby_to_s(data)} is not a member of {ruby_inspect(enum)}."
-
-
-def msg_invalid_keys(extra: list) -> str:
-    keys = '", "'.join(sorted(extra))
-    verb = "is not a" if len(extra) == 1 else "are not"
-    suffix = "." if len(extra) == 1 else "s."
-    return f'"{keys}" {verb} permitted key{suffix}'
-
-
-def msg_min_items_tuple(required_n: int, supplied_n: int) -> str:
-    return (
-        f"{required_n} item{'' if required_n == 1 else 's'} required; "
-        f"only {supplied_n} {'was' if supplied_n == 1 else 'were'} supplied."
-    )
-
-
-def msg_max_items_tuple(allowed_n: int, supplied_n: int) -> str:
-    return (
-        f"No more than {allowed_n} item{' is' if allowed_n == 1 else 's are'} "
-        f"allowed; {supplied_n} {'were' if supplied_n > 1 else 'was'} supplied."
-    )
-
-
-def msg_max_failed(data: Any, maximum: Any, exclusive: bool) -> str:
-    eq = "" if exclusive else " or equal to"
-    return f"{ruby_to_s(data)} must be less than{eq} {ruby_to_s(maximum)}."
-
-
-def msg_min_failed(data: Any, minimum: Any, exclusive: bool) -> str:
-    eq = "" if exclusive else " or equal to"
-    return f"{ruby_to_s(data)} must be greater than{eq} {ruby_to_s(minimum)}."
-
-
-def msg_max_items(max_items: int, size: int) -> str:
-    return (
-        f"No more than {max_items} item{' is' if max_items == 1 else 's are'} "
-        f"allowed; {size} {'was' if size == 1 else 'were'} supplied."
-    )
-
-
-def msg_min_items(min_items: int, size: int) -> str:
-    return (
-        f"{min_items} item{'' if min_items == 1 else 's'} required; "
-        f"only {size} {'was' if size == 1 else 'were'} supplied."
-    )
-
-
-def msg_max_length(max_length: int, length: int) -> str:
-    return (
-        f"Only {max_length} character{' is' if max_length == 1 else 's are'} "
-        f"allowed; {length} {'was' if length == 1 else 'were'} supplied."
-    )
-
-
-def msg_min_length(min_length: int, length: int) -> str:
-    return (
-        f"At least {min_length} character{' is' if min_length == 1 else 's are'} "
-        f"required; only {length} {'was' if length == 1 else 'were'} supplied."
-    )
-
-
-def msg_max_properties(max_properties: int, size: int) -> str:
-    return (
-        f"No more than {max_properties} propert{'y is' if max_properties == 1 else 'ies are'} "
-        f"allowed; {size} {'was' if size == 1 else 'were'} supplied."
-    )
-
-
-def msg_min_properties(min_properties: int, size: int) -> str:
-    return (
-        f"At least {min_properties} propert{'y is' if min_properties == 1 else 'ies are'} "
-        f"required; {size} {'was' if size == 1 else 'were'} supplied."
-    )
-
-
-def msg_multiple_of(data: Any, multiple_of: Any) -> str:
-    return f"{ruby_to_s(data)} is not a multiple of {ruby_to_s(multiple_of)}."
-
-
-def msg_pattern_failed(data: Any, pattern_source: str) -> str:
-    return f"{ruby_to_s(data)} does not match {ruby_regexp_inspect(pattern_source)}."
-
-
-def msg_required_failed(missing: list) -> str:
-    keys = '", "'.join(str(m) for m in sorted(missing))
-    verb = "wasn't" if len(missing) == 1 else "weren't"
-    return f'"{keys}" {verb} supplied.'
-
-
-def msg_invalid_type(parent_key: str, data: Any, types: list) -> str:
-    from .errors import to_list
-
-    return f"For '{parent_key}', {ruby_inspect(data)} is not {to_list(types)}."
-
-
-def msg_unique_items() -> str:
-    return "Duplicate items are not allowed."
-
-
-def msg_loop_detected() -> str:
-    return "Validation loop detected."

@@ -27,8 +27,6 @@ release path, it never removes the old behavior).
 
 from __future__ import annotations
 
-from typing import Iterable
-
 from pyspark.sql import DataFrame
 
 _ATTR = "_jss_cached_deps"
@@ -56,11 +54,6 @@ def release(df: DataFrame, blocking: bool = False) -> DataFrame:
         d.unpersist(blocking)
     setattr(df, _ATTR, [])
     return df
-
-
-def release_all(frames: Iterable[DataFrame], blocking: bool = False) -> None:
-    for f in frames:
-        release(f, blocking)
 
 
 def materialize(df: DataFrame, path: str = None,

@@ -280,25 +280,6 @@ def ngram_structs(col: Column, n: int = 3) -> Column:
         *[F.slice(toks, i + 1, width).alias(f"t{i}") for i in range(n)]))
 
 
-def ngrams(col: Column, n: int = 3) -> Column:
-    """ALL word n-grams as joined strings, duplicates included — the
-    STRING-FORM REFERENCE implementation (it mirrors the DuckDB oracles'
-    string_agg shape one-to-one). Execution paths use
-    :func:`ngram_structs` instead: this form builds each gram inside a
-    ``transform`` lambda, which never enters codegen (~45 µs/eval).
-    Short documents (< n tokens) yield an empty array (same guard
-    rationale as shingles: sequence() counts down into negatives
-    otherwise)."""
-    toks = tokens(col)
-    return F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - n),
-            lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def ngram_repetition(df: DataFrame, n: int = 3, text_col: str = "text",
                      id_col: str = "doc_id") -> DataFrame:
     """Gopher-style repetition quality signals per document:

@@ -14,38 +14,8 @@ from typing import Any, Optional
 
 from .errors import AggregateError
 
-# JSON type name -> membership test over parsed-JSON Python values.
-# Mirrors Schema::TYPE_MAP (schema.rb:5-13): "number" ⊇ integer, "integer"
-# strict; booleans are not integers (unlike Python's bool ⊂ int).
+# The type names a schema may declare (Schema::TYPE_MAP, schema.rb:5-13).
 ALLOWED_TYPES = ["any", "array", "boolean", "integer", "number", "null", "object", "string"]
-
-
-def json_type_of(data: Any) -> str:
-    """Python value -> JSON type name (Parser::FRIENDLY_TYPES, parser.rb:9-18)."""
-    if data is None:
-        return "null"
-    if isinstance(data, bool):
-        return "boolean"
-    if isinstance(data, int):
-        return "integer"
-    if isinstance(data, float):
-        return "number"
-    if isinstance(data, str):
-        return "string"
-    if isinstance(data, list):
-        return "array"
-    if isinstance(data, dict):
-        return "object"
-    raise TypeError(f"not a JSON value: {data!r}")
-
-
-def type_matches(type_name: str, data: Any) -> bool:
-    t = json_type_of(data)
-    if type_name == "any":
-        return True
-    if type_name == "number":
-        return t in ("integer", "number")
-    return t == type_name
 
 
 @dataclass

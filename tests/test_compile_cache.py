@@ -132,9 +132,9 @@ def test_disk_cache_survives_memory_clear(spark, monkeypatch, tmp_path):
 
 
 def test_disk_cache_roundtrips_variant_child_specs(spark, monkeypatch, tmp_path):
-    """The variant path caches a 3-tuple (parts, preprojections,
-    child_specs); the JSON round-trip must restore all of it — a nested
-    object subschema forces non-empty child_specs."""
+    """The variant path caches (parts, preprojections); the JSON
+    round-trip must restore both — a nested object subschema forces
+    pre-projected accessors two levels deep, each naming earlier ones."""
     calls = _count_compiles(monkeypatch)
     nested = {"properties": {
         "meta": {"properties": {"a": {"type": ["integer"]},

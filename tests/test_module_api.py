@@ -1,6 +1,11 @@
 """Module entry points (reference: test/json_schema_test.rb) and error
 formatting (test/json_schema/error_test.rb)."""
 
+import ast
+import re
+from collections import Counter
+from pathlib import Path
+
 import pytest
 
 import json_schema_spark as jss
@@ -51,3 +56,20 @@ def test_schema_error_str():
     err = SchemaError(schema.definitions["app"], "boom.", "invalid_type")
     assert str(err) == "#/definitions/app: boom."
     assert str(SchemaError(None, "boom.", "x")) == "boom."
+
+
+def test_every_top_level_name_is_referenced():
+    """Each top-level def/class of the package is named somewhere besides
+    its own definition: in the package, the tests, the spark entry point,
+    the bench scripts or the benchmark. A name nothing mentions is dead
+    code."""
+    root = Path(__file__).resolve().parents[1]
+    pkg = root / "json_schema_spark"
+    files = [*pkg.rglob("*.py"), *(root / "tests").rglob("*.py"),
+             root / "__spark_entry__.py", *root.glob("bench*.py"),
+             *(root / "perfbench").rglob("*.py")]
+    words = Counter(w for f in files for w in re.findall(r"\w+", f.read_text()))
+    defined = Counter(
+        stmt.name for f in pkg.rglob("*.py") for stmt in ast.parse(f.read_text()).body
+        if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)))
+    assert sorted(n for n, k in defined.items() if words[n] <= k) == []

@@ -12,6 +12,8 @@ from __future__ import annotations
 
 import json
 import random
+import re
+from collections import Counter
 
 import pytest
 
@@ -129,3 +131,66 @@ def test_engine_matches_oracle(spark, seed):
             f"engine={got_errors} oracle={sorted(want_errors)}")
         assert got_errors == sorted(want_errors), (
             f"seed={seed} doc={doc!r} schema={schema_dict!r}")
+
+
+NESTED = {
+    "required": ["m"],
+    "properties": {"m": {
+        "type": ["object"], "required": ["n"],
+        "properties": {"n": {
+            "type": ["object"], "required": ["x", "y"],
+            "properties": {
+                "x": {"type": ["number"], "minimum": 0, "maximum": 100,
+                      "multipleOf": 5},
+                "y": {"type": ["string"], "maxLength": 3},
+            }}}}},
+}
+NESTED_DOCS = [
+    {"m": {"n": {"x": 10, "y": "ab"}}},
+    {"m": {"n": {"x": 7, "y": "abcd"}}},
+    {"m": {"n": {"x": -5}}},
+    {"m": {"n": {"x": 105.0, "y": 3}}},
+    {"m": {"n": {"x": "5", "y": None}}},
+    {"m": {"n": "str"}},
+    {"m": {}},
+    {"m": 4},
+    {},
+    5,
+]
+# the accessors VariantValue shares: type tag, object-map / array casts and
+# property lookup, over the root column (__doc) or a pre-projected one
+# (__jss_*); lambda variables carry no leading underscores
+ACCESSOR = re.compile(
+    r"schema_of_variant\(__\w+\)"
+    r"|try_variant_get\(__\w+, '\$', '(?:map<string,variant>|array<variant>)'\)"
+    r"|element_at\(__\w+, '[^']*'\)")
+
+
+def test_nested_variant_accessors_emitted_once(spark, monkeypatch):
+    """Below the root's children, every lambda-free accessor is still
+    emitted once (as a pre-projection) rather than re-derived at each use,
+    and the verdicts stay those of the oracle."""
+    compiled = []
+    cached = ValidationEngine._cached_compile
+
+    def spy(self, *args):
+        out = cached(self, *args)
+        compiled.append(out)
+        return out
+
+    monkeypatch.setattr(ValidationEngine, "_cached_compile", spy)
+    df = spark.createDataFrame(
+        [(i, json.dumps(d)) for i, d in enumerate(NESTED_DOCS)], "i int, doc string")
+    res = ValidationEngine(spark).validate_json(df, "doc", NESTED, id_cols=["i"])
+    rows = {r["i"]: r for r in res.annotated.select("i", "is_valid", "violations").collect()}
+
+    parts, preprojections = compiled[0]
+    texts = [t for p in parts for t in (p.valid, p.errors)] + [sql for _, sql in preprojections]
+    uses = Counter(m for t in texts for m in ACCESSOR.findall(t))
+    assert uses and all(k == 1 for k in uses.values()), uses.most_common(3)
+
+    oracle = OracleValidator(compile_schema(NESTED))
+    for i, doc in enumerate(NESTED_DOCS):
+        want_valid, want_errors = oracle.validate(doc)
+        got = sorted((e["error_type"], e["path"]) for e in (rows[i]["violations"] or []))
+        assert (rows[i]["is_valid"], got) == (want_valid, sorted(want_errors)), doc
