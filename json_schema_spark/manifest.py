@@ -125,10 +125,19 @@ class RunManifest:
         self.spark = spark
         self.path = path
 
+    def _read(self) -> Optional[DataFrame]:
+        """The manifest table, or None before the first commit. Only a
+        missing path reads as empty: an unreadable manifest raises, since
+        treating it as empty would re-validate every bucket and append
+        duplicate violation rows."""
+        fs, hpath = _hadoop_path(self.spark, self.path)
+        if not fs.exists(hpath):
+            return None
+        return self.spark.read.parquet(self.path)
+
     def completed_buckets(self) -> List[int]:
-        try:
-            df = self.spark.read.parquet(self.path)
-        except Exception:
+        df = self._read()
+        if df is None:
             return []
         rows = (df.where(F.col("status") == "done")
                 .select("bucket").distinct().collect())
@@ -138,9 +147,8 @@ class RunManifest:
         rows_df.coalesce(1).write.mode("append").parquet(self.path)
 
     def summary(self) -> dict:
-        try:
-            df = self.spark.read.parquet(self.path)
-        except Exception:
+        df = self._read()
+        if df is None:
             return {"buckets": 0, "rows": 0, "violations": 0}
         agg = (df.where(F.col("status") == "done")
                .agg(F.countDistinct("bucket").alias("buckets"),

@@ -243,3 +243,31 @@ def test_commit_group_is_one_pass(spark, docs, tmp_path):
         if sum(st.inputBytes() for st in stages):
             reads[job] = sum(st.inputRecords() for st in stages)
     assert list(reads.values()) == [CFG.n_docs], reads
+
+
+def test_unreadable_manifest_fails_loudly(spark, docs, tmp_path):
+    """A manifest that exists but cannot be read must raise before any
+    bucket is re-validated: reading it as empty would append every
+    bucket's violations to the sink a second time."""
+    import hashlib
+
+    from py4j.protocol import Py4JJavaError
+
+    schema = documents_json_schema(CFG)
+    manifest_path = tmp_path / "m"
+    violations_path = str(tmp_path / "v")
+    validate_resumable(spark, docs, schema, str(manifest_path),
+                       violations_path, n_buckets=4, buckets_per_commit=4)
+
+    def sink():
+        rows = sorted(map(tuple, spark.read.parquet(violations_path).collect()))
+        return len(rows), hashlib.sha256(repr(rows).encode()).hexdigest()
+
+    before = sink()
+    assert before[0] > 0
+    # a summary file: schema inference reads it before any data file
+    (manifest_path / "_common_metadata").write_text("not parquet")
+    with pytest.raises(Py4JJavaError, match="_common_metadata"):
+        validate_resumable(spark, docs, schema, str(manifest_path),
+                           violations_path, n_buckets=4, buckets_per_commit=4)
+    assert sink() == before

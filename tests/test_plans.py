@@ -264,16 +264,48 @@ def test_bm25_is_takeordered_pruned_and_python_free(spark):
     assert "ReadSchema: struct<doc_id:bigint,text:string>" in plan, plan
 
 
-def test_kmeans_assignment_broadcasts_centroids(spark):
-    """The k-means scoring pass is a broadcast crossJoin against the O(k·dim)
-    centroid table — the corpus side must see no shuffle for assignment."""
+def test_kmeans_assignment_has_no_exchange_or_join(spark):
+    """The k-means scoring pass is row-local against the O(k·dim) centroid
+    matrix the scorer UDF carries — the corpus is never shuffled or joined
+    for assignment."""
     from json_schema_spark.pipeline import similarity
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     cen, assign = similarity.kmeans(emb, k=4, n_iters=1)
     plan = _plan(assign)
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan, plan
-    assert "Exchange rangepartitioning" not in plan, plan
+    assert "Exchange" not in plan, plan
+    assert "Join" not in plan, plan
+    spark.catalog.clearCache()
+
+
+def test_ivf_family_has_no_nested_loop_join(spark):
+    """Centroid scoring is one row-local pass for every IVF-family
+    operator: no n×C CartesianProduct or BroadcastNestedLoopJoin anywhere
+    in their plans, and ivf_topk's candidate pairs come out of one cid
+    join already unique — no aggregate over (query_id, neighbor_id)."""
+    import re
+
+    from json_schema_spark.pipeline import similarity
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    plans = {
+        "ivf_topk": _plan(similarity.ivf_topk(emb, k=3, n_centroids=8,
+                                              nprobe=2)),
+        "prototypicality": _plan(similarity.prototypicality(
+            emb, n_centroids=8)),
+        "semantic_dedup": _plan(similarity.semantic_dedup(
+            emb, n_centroids=8)),
+        "ivfpq_topk": _plan(similarity.ivfpq_topk(
+            emb, k=3, n_queries=2, n_cells=4, nprobe=2, m=4, k_sub=4,
+            n_iters=1)),
+        "kmeans": _plan(similarity.kmeans(emb, k=4, n_iters=1)[1]),
+    }
+    for name, plan in plans.items():
+        assert "CartesianProduct" not in plan, (name, plan)
+        assert "BroadcastNestedLoopJoin" not in plan, (name, plan)
+    assert not re.search(r"Aggregate\(keys=\[query_id#\d+L?, "
+                         r"neighbor_id#\d+L?\]", plans["ivf_topk"]), plans
+    spark.catalog.clearCache()
 
 
 def test_pq_topk_broadcasts_queries_no_global_sort(spark):
@@ -303,15 +335,17 @@ def test_bpe_encode_broadcasts_vocab(spark):
 
 
 def test_ivfpq_probe_filter_precedes_scoring(spark):
-    """IVF-PQ must prune candidates with the row-local array_contains
-    probe filter on the broadcast query row — the ADC Arrow UDF only sees
-    probed-cell rows, and nothing range-partitions."""
+    """IVF-PQ must prune candidates with a broadcast hash join of the
+    (query, probed cell) rows on the neighbor's cell id — the ADC Arrow
+    UDF only sees probed-cell rows, and nothing range-partitions."""
+    import re
+
     from json_schema_spark.pipeline import similarity
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     plan = _plan(similarity.ivfpq_topk(emb, k=3, n_queries=2, n_cells=4,
                                        nprobe=2, m=4, k_sub=4, n_iters=1))
-    assert "array_contains" in plan, plan
+    assert re.search(r"BroadcastHashJoin \[cid#\d+\], \[cid#\d+\]", plan), plan
     assert "BroadcastExchange" in plan, plan
     assert "Exchange rangepartitioning" not in plan, plan
 

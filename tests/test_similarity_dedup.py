@@ -123,10 +123,10 @@ def test_short_docs_do_not_abort_shingle_pipelines(spark):
 
 
 def test_ivf_coarse_scan_runs_once(spark):
-    """The n×C centroid crossJoin feeds both the assignment aggregate and
-    the probe ranking; it must be cached so no cross join remains outside
-    an InMemoryRelation in the optimized plan (round-2 VERDICT measured
-    the coarse scoring running twice)."""
+    """The coarse scoring pass (one row-local scorer UDF, no n×C cross
+    join) feeds both sides of the candidate join on cid; it must be cached
+    so it runs once, and no cross join may appear in the optimized plan
+    (round-2 VERDICT measured the coarse scoring running twice)."""
     rows = _planted_corpus(n_base=80, n_dups=0)
     df = _emb_df(spark, rows)
     out = similarity.ivf_topk(df, k=3, n_centroids=16, nprobe=2)
@@ -223,3 +223,118 @@ class TestPrototypicality:
             "vec_id bigint, embedding array<float>")
         out = similarity.prototypicality(df, n_centroids=2).collect()
         assert all(r.pr == 0.0 for r in out)
+
+
+def _crossjoin_assignments(base, cen, nprobe):
+    """The pairwise formulation ``ivf_assignments`` replaced, kept as the
+    reference: broadcast crossJoin of every vector with every centroid,
+    ``_pair_cosine_udf`` per pair, ``max_by(cid, struct(ccos, -cid))``
+    for the cell and a ``(ccos desc, cid)`` row_number for the probes →
+    {id: (cid, ccos, [probe cids])}."""
+    from pyspark.sql import Window
+
+    pc = similarity._pair_cosine_udf()
+    scored = (base.crossJoin(F.broadcast(cen))
+              .withColumn("ccos", pc(F.col("qv"), F.col("cv"),
+                                     F.col("nrm"), F.col("cn"))))
+    best = (scored.groupBy("vec_id")
+            .agg(F.max_by(F.struct("cid", "ccos"),
+                          F.struct(F.col("ccos"), -F.col("cid"))).alias("b"))
+            .collect())
+    w = Window.partitionBy("vec_id").orderBy(F.col("ccos").desc(), "cid")
+    probes = {}
+    for r in (scored.withColumn("prank", F.row_number().over(w))
+              .where(F.col("prank") <= nprobe).collect()):
+        probes.setdefault(r["vec_id"], []).append((r["prank"], r["cid"]))
+    return {r["vec_id"]: (r["b"]["cid"], r["b"]["ccos"],
+                          [c for _, c in sorted(probes.get(r["vec_id"], []))])
+            for r in best}
+
+
+def _scorer_corpus(seed, n=40, dim=3):
+    """Small-integer vectors (many exact cosine ties, e.g. orthogonal
+    pairs), duplicated vectors, NULL vectors, NULL elements and zero
+    vectors; the ids with the smallest md5('ivf_42_' || id) — the
+    centroid sample — get a NULL vector, a zero vector, a NULL element
+    and the same vector twice."""
+    import hashlib
+
+    rng = np.random.RandomState(seed)
+    vecs = {i: [float(x) for x in rng.randint(-2, 3, dim) * 0.5]
+            for i in range(n)}
+    for i in rng.choice(n, 6, replace=False):
+        vecs[int(i)] = vecs[int(rng.randint(n))]        # duplicates
+    for i in rng.choice(n, 3, replace=False):
+        vecs[int(i)] = None
+    for i in rng.choice(n, 2, replace=False):
+        vecs[int(i)] = [0.0] * dim
+    by_hash = sorted(range(n), key=lambda i: int(hashlib.md5(
+        f"ivf_42_{i}".encode()).hexdigest()[:15], 16))
+    vecs[by_hash[0]] = None
+    vecs[by_hash[1]] = [0.0] * dim
+    vecs[by_hash[2]] = [1.0, None] + [0.5] * (dim - 2)
+    vecs[by_hash[3]] = vecs[by_hash[4]] = [1.0, 1.0] + [0.0] * (dim - 2)
+    return [(i, v) for i, v in vecs.items()]
+
+
+def _sampled_centroids(base, n_centroids):
+    """The pairwise path's centroid table: the md5 sample of the
+    quantized corpus, numbered by a row_number over the sample."""
+    from pyspark.sql import Window
+
+    r = F.conv(F.substring(F.md5(F.concat(
+        F.lit("ivf_42_"), F.col("vec_id").cast("string"))), 1, 15),
+        16, 10).cast("bigint")
+    return (base.withColumn("r", r).orderBy("r", "vec_id")
+            .limit(n_centroids)
+            .withColumn("cid", F.row_number().over(
+                Window.orderBy("r", "vec_id")))
+            .select("cid", F.col("qv").alias("cv"), F.col("nrm").alias("cn")))
+
+
+@pytest.mark.parametrize("seed,n_centroids,nprobe,cells", [
+    (1, 6, 3, None), (2, 8, 2, None), (3, 5, 9, None), (4, 6, 3, 3)])
+def test_ivf_scorer_matches_crossjoin(spark, monkeypatch, seed,
+                                      n_centroids, nprobe, cells):
+    """Row-local scorer == crossJoin + max_by + row_number, for the md5
+    sample (with NULL, zero and duplicated vectors among the centroids)
+    and for a trained-style ``centroids=`` table with non-contiguous cids;
+    ``cells`` shrinks the matmul chunk to a row at a time."""
+    if cells is not None:
+        monkeypatch.setattr(similarity, "_SCORE_CELLS", cells)
+    df = spark.createDataFrame(_scorer_corpus(seed),
+                               "vec_id bigint, embedding array<float>")
+    base = similarity._quant_vecs(df, "vec_id", "embedding", 1000,
+                                  "qv", "nrm")
+    trained = spark.createDataFrame(
+        [(7, [500, 500, 0], 500000), (3, [0, 0, 0], 0), (11, None, None),
+         (5, [500, 500, 0], 500000), (2, [-500, 1000, 500], 1500000)],
+        "cid int, cv array<bigint>, cn bigint")
+    for cen_ref, kwargs in ((_sampled_centroids(base, n_centroids),
+                             {}), (trained, {"centroids": trained})):
+        cen, assign = similarity.ivf_assignments(
+            df, n_centroids, nprobe=nprobe, **kwargs)
+        got = {r["vec_id"]: (r["cid"], r["ccos"], list(r["probes"]))
+               for r in assign.collect()}
+        want = _crossjoin_assignments(base, cen_ref, nprobe)
+        assert len(got) == len(want) == 40
+        assert got == want, {i: (got[i], want[i]) for i in got
+                             if got[i] != want.get(i)}
+        assert cen == sorted(map(tuple, cen_ref.collect()))
+        # the sample really holds the NULL, zero and duplicated centroids
+        assert any(cv is None for _, cv, _ in cen)
+
+
+def test_ivf_scorer_edge_inputs(spark):
+    """An empty table gives an empty assignment (no error), and a
+    centroid table with a duplicated cid is rejected."""
+    empty = _emb_df(spark, [])
+    cen, assign = similarity.ivf_assignments(empty, 4, nprobe=2)
+    assert cen == [] and assign.count() == 0
+    assert similarity.ivf_topk(empty, k=3, n_centroids=4).count() == 0
+    dup = spark.createDataFrame([(1, [1, 0], 1), (1, [0, 1], 1)],
+                                "cid int, cv array<bigint>, cn bigint")
+    df = _emb_df(spark, [(1, [1.0, 0.0])])
+    with pytest.raises(ValueError, match="unique"):
+        similarity.ivf_assignments(df, centroids=dup)
+    spark.catalog.clearCache()
